@@ -19,6 +19,24 @@ def test_unknown_pipeline_key():
         cli.main(["NOT_A_PIPELINE"])
 
 
+def test_trailing_staging_dir_without_value_fails_loudly(tmp_path):
+    """A trailing ``--stagingDir`` with no operand is a half-given flag:
+    it must stop the run with a message naming the flag, not fall
+    through to the pipeline parser or run without the asked-for
+    durable staging."""
+    out = tmp_path / "keep"
+    with pytest.raises(SystemExit, match="--stagingDir requires a value"):
+        cli.main(
+            [
+                "NEAR_DUP_KEEP_BEST",
+                "--documents", str(tmp_path / "docs"),
+                "--output", str(out),
+                "--stagingDir",
+            ]
+        )
+    assert not out.exists()
+
+
 def test_sentence_segmentation_pipeline(spark, tmp_path):
     docs = spark.createDataFrame(
         [

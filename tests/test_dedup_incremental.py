@@ -2002,3 +2002,59 @@ def test_negative_rescue_bound_rejected(spark, tmp_path):
             _df(spark, ROWS_B1), max_bucket_size=2, oversize_policy="star",
             star_rescue_reps=-1,
         )
+
+
+def test_reconcile_durable_staging_matches_local_checkpoint(spark, tmp_path):
+    """Reconcile's lineage cuts — the repair tower's rounds and the
+    pre-overwrite state (repaired, ghost hold, failures, prior partition
+    rows, watermarks) — all go through functions/staging.stage, so a
+    configured staging dir makes the longest-lived production path
+    durable. Two copies of one capped chain-cluster index, reconciled with
+    the staging dir set and unset, must return the same pairs and leave
+    identical pairs/, failed/ and reconciled/ tables; the durable run must
+    have written its intermediates as parquet under the staging dir."""
+    import os
+    import shutil
+
+    from translator_tm_provider_pipelines_spark.functions.staging import (
+        STAGING_DIR_CONF,
+    )
+
+    rows = _chain_rows()
+    local_idx = str(tmp_path / "local")
+    for bi, batch in enumerate([rows[:2], rows[2:4], rows[4:]]):
+        di.update_near_dup_index(
+            spark, _df(spark, batch), local_idx, batch_id=bi,
+            max_bucket_size=2, **CHAIN_LSH,
+        )
+    durable_idx = str(tmp_path / "durable")
+    shutil.copytree(local_idx, durable_idx)
+    settings = dict(max_bucket_size=2, threshold=0.85, k=3, repair_hops=-1)
+
+    def pairs(df):
+        return sorted(map(tuple, df.select("doc_a", "doc_b", "jaccard").collect()))
+
+    spark.conf.unset(STAGING_DIR_CONF)
+    got_local = pairs(di.reconcile_capped_buckets(spark, local_idx, **settings))
+    sdir = str(tmp_path / "staging")
+    spark.conf.set(STAGING_DIR_CONF, sdir)
+    try:
+        got_durable = pairs(
+            di.reconcile_capped_buckets(spark, durable_idx, **settings)
+        )
+    finally:
+        spark.conf.unset(STAGING_DIR_CONF)
+    assert got_local and got_durable == got_local
+    for sub in ("pairs", "failed", "reconciled"):
+        local_rows = spark.read.parquet(f"{local_idx}/{sub}").collect()
+        durable_rows = spark.read.parquet(f"{durable_idx}/{sub}").collect()
+        assert local_rows and sorted(map(tuple, durable_rows)) == sorted(
+            map(tuple, local_rows)
+        ), sub
+    staged = [
+        name
+        for d in os.listdir(sdir)
+        for name in os.listdir(os.path.join(sdir, d))
+        if name.endswith(".parquet")
+    ]
+    assert staged

@@ -122,3 +122,24 @@ def test_cli_explicit_staging_dir_is_kept(spark, tmp_path):
         n.startswith("stage-") for n in os.listdir(sdir)
     )
     assert spark.conf.get(STAGING_DIR_CONF, None) in (None, "")
+
+
+def test_no_raw_local_checkpoint_outside_staging():
+    """Every lineage-truncation point goes through ``stage`` so that a
+    configured staging dir makes it durable: no module of the package
+    may call ``.localCheckpoint(`` itself."""
+    import translator_tm_provider_pipelines_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    allowed = os.path.join(root, "functions", "staging.py")
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == allowed:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                for no, line in enumerate(fh, 1):
+                    if ".localCheckpoint(" in line:
+                        offenders.append(f"{os.path.relpath(path, root)}:{no}")
+    assert not offenders, offenders

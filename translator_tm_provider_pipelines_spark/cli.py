@@ -1599,7 +1599,9 @@ def main(argv: list[str] | None = None) -> int:
     staging: str | None = None
     user_staging = False
     for i, a in enumerate(rest):
-        if a == "--stagingDir" and i + 1 < len(rest):
+        if a == "--stagingDir":
+            if i + 1 == len(rest):
+                raise SystemExit("--stagingDir requires a value")
             staging, user_staging = rest[i + 1], True
             del rest[i : i + 2]
             break

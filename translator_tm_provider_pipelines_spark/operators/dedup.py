@@ -578,20 +578,175 @@ def star_rescue_pairs(
         bands, verified, max_bucket_size, attempted=attempted,
         min_shared_bands=min_shared_bands, overcap_bands=overcap_bands,
     )
-    chosen = (
-        edges.groupBy("band", "band_sig")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_set("__m")), 1, reps_per_bucket
-            ).alias("__rs")
-        )
-        .select("band", "band_sig", F.explode("__rs").alias("__m"))
+    return _rescue_round(edges, reps_per_bucket)[0]
+
+
+def _rescue_round(
+    edges: DataFrame, reps_per_bucket: int
+) -> tuple[DataFrame, DataFrame]:
+    """One rescue round over :func:`_star_untried_edges` output: the
+    ``reps_per_bucket`` smallest members of each bucket propose ALL their
+    untried edges. Returns the (doc_a, doc_b) candidates and the
+    (band, band_sig) keys of the buckets whose member list overflowed the
+    slice — the buckets the per-round bound, not a new attachment, sends
+    into the next round's scope. The one definition under
+    :func:`star_rescue_pairs` and the repair tower's rescue drain."""
+    sliced = edges.groupBy("band", "band_sig").agg(
+        F.slice(
+            F.array_sort(F.collect_set("__m")), 1, reps_per_bucket
+        ).alias("__rs"),
+        (F.size(F.collect_set("__m")) > reps_per_bucket).alias("__ovf"),
     )
-    return (
+    chosen = sliced.select("band", "band_sig", F.explode("__rs").alias("__m"))
+    cands = (
         edges.join(chosen, ["band", "band_sig", "__m"], "left_semi")
         .select("doc_a", "doc_b")
         .distinct()
     )
+    return cands, sliced.where(F.col("__ovf")).select("band", "band_sig")
+
+
+def _star_repair(
+    docs: DataFrame,
+    bands: DataFrame,
+    verified: DataFrame,
+    attempted: DataFrame,
+    max_bucket_size: int,
+    *,
+    k: int,
+    threshold: float,
+    text_col: str,
+    id_col: str,
+    hops: int,
+    reps_per_hop: int,
+    rescue_reps: int,
+    rescue_min_bands: int,
+    scope: DataFrame | None = None,
+    repair_stats: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The star-repair tower shared by :func:`near_duplicates` and the
+    incremental index's ``reconcile_capped_buckets``: the
+    :func:`star_second_hop_pairs` hop loop (``hops`` rounds; negative =
+    until converged), then the :func:`_star_untried_edges` rescue drain
+    (``rescue_reps`` members per bucket per round, until no qualifying
+    untried edge remains). Every round is candidates → verify → union
+    into ``verified`` → union into ``attempted``, so failed edges are
+    never re-verified and each round shrinks the untried set.
+
+    ``verified`` / ``attempted``: every (doc_a, doc_b) edge already
+    verified / already Jaccard-tested before the tower (extra columns are
+    ignored). ``verified`` must be materialized by the caller — every
+    round reads it. ``scope``: (band, band_sig) keys of the over-cap
+    buckets to repair; ``None`` means every over-cap bucket. Hops promote
+    only scope-bucket members. The rescue starts from ``scope`` and
+    drains: round r+1's scope is the buckets touched by round r's
+    attachments (a newly attached member is a fresh rescue target
+    wherever it sits) plus the buckets whose member slice overflowed
+    (:func:`_rescue_round`). At exit no qualifying untried edge remains
+    anywhere — the attachment fixpoint both callers certify, identical
+    at the same ``rescue_min_bands`` (keep-list equality between the
+    batch path and a drained index).
+
+    Returns ``(found, tried)``: the pairs the tower verified (doc_a,
+    doc_b, jaccard) and the candidates it tested (doc_a, doc_b). Fills
+    ``repair_stats`` with ``hops_run``/``converged`` and
+    ``rescue_rounds``/``rescue_converged`` for the loops that ran.
+
+    Staging: each round stages its candidates (and, in the rescue, its
+    untried-edge enumeration) and its verified pairs exactly once; the
+    cumulative verified, attempted, found and tried frames are flat
+    unions over those staged pieces, so plans never stack across rounds
+    and no frame is re-staged. When a loop proves it loops (a first
+    productive round that admits another), the over-cap band rows
+    (:func:`_overcap_band_rows`) and the attempted set are materialized
+    once and reused by every later round of both loops — instead of
+    re-deriving the band pipeline per iteration (r11: the converged sf10
+    hop loop re-derived the full-corpus band table 6×). Lazy on purpose:
+    a single-round run is cheaper re-deriving than checkpointing
+    (measured at sf0.1 — the eager version cost the 1-hop bench query
+    ~2 s in pure job-scheduling overhead)."""
+    edges = verified.select("doc_a", "doc_b")
+    attempted = attempted.select("doc_a", "doc_b")
+    # empty, typed like the outputs: every productive round unions into them
+    found = verified.select(
+        "doc_a", "doc_b", F.lit(None).cast("double").alias("jaccard")
+    ).limit(0)
+    tried = attempted.limit(0)
+    ob = None  # materialized over-cap band rows, once a loop loops
+
+    def in_scope(rows: DataFrame) -> DataFrame:
+        if scope is None:
+            return rows
+        return rows.join(scope, ["band", "band_sig"], "left_semi")
+
+    def drain(propose, limit: int | None) -> tuple[int, bool]:
+        """Rounds of ``propose(last round's verified pairs)`` → verify
+        until a round proposes nothing (converged) or ``limit``
+        productive rounds ran."""
+        nonlocal edges, attempted, found, tried, ob
+        n, v = 0, None
+        while limit is None or n < limit:
+            cands = stage(propose(v))
+            if not cands.head(1):
+                return n, True
+            if n == 0 and limit != 1 and ob is None:
+                ob = stage(_overcap_band_rows(bands, max_bucket_size))
+                attempted = stage(attempted)
+            n += 1
+            v = stage(
+                _verify_candidates(
+                    docs, cands, k=k, threshold=threshold,
+                    text_col=text_col, id_col=id_col,
+                )
+            )
+            edges = edges.unionByName(v.select("doc_a", "doc_b"))
+            found = found.unionByName(v)
+            attempted = attempted.unionByName(cands)
+            tried = tried.unionByName(cands)
+        return n, False
+
+    def hop(_):
+        return star_second_hop_pairs(
+            in_scope(bands), edges, max_bucket_size, attempted=attempted,
+            reps_per_hop=reps_per_hop,
+            overcap_bands=None if ob is None else in_scope(ob),
+        )
+
+    rescue_scope, overflow = scope, None
+
+    def rescue(last):
+        nonlocal rescue_scope, overflow
+        if last is not None:
+            touched = ob.join(
+                last.select(
+                    F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+                ).distinct(),
+                "doc_id",
+                "left_semi",
+            ).select("band", "band_sig")
+            rescue_scope = touched.unionByName(overflow).distinct()
+        # eligible members come from the scope buckets, but the pair
+        # enumeration and the shared-bucket count run over ALL over-cap
+        # buckets (a scoped count would mis-filter pairs whose other
+        # shared buckets are out of scope — see _star_untried_edges)
+        untried = stage(
+            _star_untried_edges(
+                bands, edges, max_bucket_size, attempted=attempted,
+                min_shared_bands=rescue_min_bands,
+                member_buckets=rescue_scope, overcap_bands=ob,
+            )
+        )
+        cands, overflow = _rescue_round(untried, rescue_reps)
+        return cands
+
+    stats = {} if repair_stats is None else repair_stats
+    if hops:
+        n, done = drain(hop, hops if hops > 0 else None)
+        stats.update({"hops_run": n, "converged": done})
+    if rescue_reps:
+        n, done = drain(rescue, None)
+        stats.update({"rescue_rounds": n, "rescue_converged": done})
+    return found, tried
 
 
 def jaccard_for_pairs(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -741,112 +896,26 @@ def near_duplicates(
         docs, cands, k=k, threshold=threshold, text_col=text_col,
         id_col=id_col, persist=persist,
     )
-    attempted = cands
-    run_hops = bool(
-        star_repair_hops and max_bucket_size is not None
+    if not (
+        (star_repair_hops or star_rescue_reps)
+        and max_bucket_size is not None
         and oversize_policy == "star"
+    ):
+        return verified
+    # every repair round reads the verified set (id set + anti-joins):
+    # materialize it once instead of stacking the verify pipeline per
+    # round. The tower starts from every over-cap bucket and no prior
+    # edges; star_repair_hops < 0 = repair until converged (at sf10 full
+    # convergence took 6 hops, SCALING.md)
+    verified = stage(verified)
+    found, _ = _star_repair(
+        docs, bands_df, verified, cands, max_bucket_size,
+        k=k, threshold=threshold, text_col=text_col, id_col=id_col,
+        hops=star_repair_hops, reps_per_hop=8,
+        rescue_reps=star_rescue_reps, rescue_min_bands=star_rescue_min_bands,
+        repair_stats=repair_stats,
     )
-    run_rescue = bool(
-        star_rescue_reps and max_bucket_size is not None
-        and oversize_policy == "star"
-    )
-    ob_cap = None
-
-    def _materialize_overcap() -> DataFrame:
-        # the hop/rescue loops only ever look at OVER-CAP bucket band
-        # rows, and the band table is static within a run — when a loop
-        # enters its SECOND round, derive and materialize that
-        # restriction once so later rounds reuse it instead of
-        # re-running the minhash→bands→sizes pipeline per iteration
-        # (r11: the converged sf10 hop loop re-derived the full-corpus
-        # band table 6×). Lazy on purpose: a single-round run is
-        # cheaper re-deriving than checkpointing (measured at sf0.1 —
-        # the eager version cost the 1-hop bench query ~2 s in pure
-        # job-scheduling overhead). Over-cap rows are
-        # boilerplate-population sized — safe to checkpoint.
-        return stage(_overcap_band_rows(bands_df, max_bucket_size))
-
-    if run_hops:
-        # star_repair_hops < 0 = repair until converged (the loop breaks
-        # as soon as a hop yields no fresh candidates; the `attempted`
-        # anti-join guarantees each hop shrinks the untried edge set, so
-        # convergence is bounded by over-cap bucket edges / reps_per_hop
-        # — at sf10 full convergence took 6 hops, SCALING.md)
-        n_hops = star_repair_hops if star_repair_hops > 0 else 1_000_000
-        hops_run, converged = 0, False
-        for _ in range(n_hops):
-            # checkpoint: the next hop's anti-joins read `verified` twice
-            # (id set + final union) and the hop loop would otherwise
-            # stack the whole verify pipeline per iteration
-            verified = stage(verified)
-            cand2 = stage(
-                star_second_hop_pairs(
-                    bands_df, verified, max_bucket_size, attempted=attempted,
-                    overcap_bands=ob_cap,
-                )
-            )
-            if not cand2.head(1):
-                converged = True
-                break
-            if hops_run == 0 and n_hops > 1:
-                # a further hop is possible: materialize the loop's
-                # static inputs once (_materialize_overcap rationale)
-                if ob_cap is None:
-                    ob_cap = _materialize_overcap()
-                attempted = stage(attempted)
-            hops_run += 1
-            v2 = _verify_candidates(
-                docs, cand2, k=k, threshold=threshold, text_col=text_col,
-                id_col=id_col,
-            )
-            verified = verified.unionByName(v2)
-            attempted = attempted.unionByName(cand2)
-        if repair_stats is not None:
-            repair_stats.update({"hops_run": hops_run, "converged": converged})
-    if run_rescue:
-        # promotion-starvation rescue (star_rescue_pairs docstring): after
-        # the hop loop stalls, members with untried edges — skipped by the
-        # smallest-id ranking — get their turn, bounded per bucket per
-        # round. Each chosen member is fully attempted after its round, so
-        # the loop converges in ceil(stranded/reps) rounds.
-        rescue_rounds, rescue_converged = 0, False
-        while True:
-            verified = stage(verified)
-            cand3 = stage(
-                star_rescue_pairs(
-                    bands_df,
-                    verified,
-                    max_bucket_size,
-                    attempted=attempted,
-                    reps_per_bucket=star_rescue_reps,
-                    min_shared_bands=star_rescue_min_bands,
-                    overcap_bands=ob_cap,
-                )
-            )
-            if not cand3.head(1):
-                rescue_converged = True
-                break
-            if rescue_rounds == 0:
-                # the while loop always admits another round: materialize
-                # the static inputs at the first productive round
-                # (_materialize_overcap rationale; ob_cap may already
-                # exist from the hop loop)
-                if ob_cap is None:
-                    ob_cap = _materialize_overcap()
-                attempted = stage(attempted)
-            rescue_rounds += 1
-            v3 = _verify_candidates(
-                docs, cand3, k=k, threshold=threshold, text_col=text_col,
-                id_col=id_col,
-            )
-            verified = verified.unionByName(v3)
-            attempted = attempted.unionByName(cand3)
-        if repair_stats is not None:
-            repair_stats.update(
-                {"rescue_rounds": rescue_rounds,
-                 "rescue_converged": rescue_converged}
-            )
-    return verified
+    return verified.unionByName(found)
 
 
 def distinct_shingle_arrays(
@@ -1037,6 +1106,12 @@ def connected_components(
     (min member id per component), one job instead of
     diameter × (join + count). Above the threshold, or with
     ``driver_threshold=0``, the distributed loop runs.
+
+    **100 TB callers: pass ``driver_threshold=0``.** There the edge set
+    is always far above any driver-sized threshold, so the probe below
+    only costs a full-edge-set ``count()`` and an executor-local cache
+    that is not durable; ``0`` skips both and goes straight to the
+    staged distributed loop.
 
     The threshold probe must not evaluate the (possibly expensive)
     upstream twice: the pair frame is persisted and the probe is ONE

@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.staging import stage
 from ..sources.obo import curie
 from .conceptfilters import DEFAULT_STOPWORDS
 
@@ -159,7 +160,7 @@ def transitive_descendants(
     driver-side off ONE collected edge list — one job total, versus one
     job per hierarchy level. Giant hierarchies (NCBITaxon-scale) exceed
     the threshold and take a FULLY distributed level-wise walk: each
-    level is one join + anti-join + localCheckpoint (the same shape as
+    level is one join + anti-join + stage (the same shape as
     ``dedup.connected_components``), and no frontier ids ever round-trip
     through the driver — the only per-level driver traffic is the
     ``isEmpty`` termination probe.
@@ -175,21 +176,22 @@ def transitive_descendants(
         .persist()
     )
     try:
-        acc = spark.createDataFrame(
-            [(r,) for r in sorted(set(root_ids))], "id string"
-        ).localCheckpoint()
+        acc = stage(
+            spark.createDataFrame(
+                [(r,) for r in sorted(set(root_ids))], "id string"
+            )
+        )
         frontier = acc
         while True:
-            nxt = (
+            nxt = stage(
                 edges.join(frontier, edges.parent == frontier.id, "left_semi")
                 .select(F.col("child").alias("id"))
                 .distinct()
                 .join(acc, "id", "left_anti")
-                .localCheckpoint()
             )
             if nxt.isEmpty():
                 return acc
-            acc = acc.unionByName(nxt).localCheckpoint()
+            acc = stage(acc.unionByName(nxt))
             frontier = nxt
     finally:
         edges.unpersist()
@@ -715,7 +717,7 @@ def ancestor_pairs_for(
     Scale-adaptive like :func:`transitive_descendants`: up to
     ``driver_threshold`` edges the collected edge list is walked
     driver-side in one job; above it, one distributed frontier join +
-    anti-join + localCheckpoint per level over the persisted edge list —
+    anti-join + stage per level over the persisted edge list —
     no pair ever round-trips through the driver, only the per-level
     ``isEmpty`` termination probe."""
     spark = terms.sparkSession
@@ -749,22 +751,20 @@ def ancestor_pairs_for(
                     sorted(acc) or [], "id string, anc string"
                 )
 
-        frontier = (
+        frontier = stage(
             ids.join(edges, ids.id == edges.child)
             .select(ids.id, edges.parent.alias("anc"))
             .distinct()
-            .localCheckpoint()
         )
         acc = frontier
         while not frontier.isEmpty():
-            nxt = (
+            nxt = stage(
                 frontier.join(edges, frontier.anc == edges.child)
                 .select(frontier.id, edges.parent.alias("anc"))
                 .distinct()
                 .join(acc, ["id", "anc"], "left_anti")
-                .localCheckpoint()
             )
-            acc = acc.unionByName(nxt).localCheckpoint()
+            acc = stage(acc.unionByName(nxt))
             frontier = nxt
         return acc
     finally:

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.staging import stage
+
 #: PubMed corpus size constant used by the reference for IDF
 #: (SemmedDbIdf.java:53).
 TOTAL_PMIDS = 34_315_455.0
@@ -74,32 +76,33 @@ def isa_edges(mrrel_lines: DataFrame, line_col: str = "line") -> DataFrame:
 def ancestor_closure(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """(cui, ancestor_cui) transitive closure of the is-a edge list —
     fully distributed iterative frontier join (one join + distinct per
-    hierarchy level, localCheckpoint to keep the plan flat), because the
+    hierarchy level, staged to keep the plan flat), because the
     UMLS closure is corpus-vocabulary-sized and must NOT round-trip
     through the driver the way dimension-sized ontology closures may
     (contrast ogerdict.transitive_descendants, which is driver-bounded by
     design for the small OBO exclusion sets)."""
-    paths = (
+    paths = stage(
         edges.select(
             F.col("child_cui").alias("cui"), F.col("parent_cui").alias("ancestor_cui")
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     up = edges.select(
         F.col("child_cui").alias("__c"), F.col("parent_cui").alias("__p")
     )
+    # each level's size is carried into the next comparison instead of
+    # recounting `paths` — one count job per hierarchy level
+    n_paths = paths.count()
     for _ in range(max_iter):
-        grown = (
+        grown = stage(
             paths.join(up, paths.ancestor_cui == up.__c)
             .select("cui", F.col("__p").alias("ancestor_cui"))
             .unionByName(paths)
             .distinct()
-            .localCheckpoint()
         )
-        if grown.count() == paths.count():
+        n_grown = grown.count()
+        if n_grown == n_paths:
             return grown
-        paths = grown
+        paths, n_paths = grown, n_grown
     return paths
 
 

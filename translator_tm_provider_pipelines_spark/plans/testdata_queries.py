@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.staging import stage
 from ..operators import annotbatch as ab
 from ..operators import classified as clf
 from ..operators import collections as coll
@@ -1613,18 +1614,22 @@ def near_dup_star_repaired_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tables once runs each base stage exactly once; the hop then builds
     # on ExistingRDD scans (plan+job shape pinned in
     # tests/test_plan_shapes.py alongside the rescued pin).
-    bands_df = dedup.lsh_bands(
-        dedup.minhash_signatures_doc(docs)
-    ).localCheckpoint()
-    cands = dedup.lsh_candidate_pairs(
-        bands_df, max_bucket_size=2, oversize_policy="star"
-    ).localCheckpoint()
-    v1 = dedup._verify_candidates(
-        docs, cands, k=3, threshold=0.8, text_col="text", id_col="doc_id"
-    ).localCheckpoint()
-    cand2 = dedup.star_second_hop_pairs(
-        bands_df, v1, 2, attempted=cands, reps_per_hop=8
-    ).localCheckpoint()
+    bands_df = stage(dedup.lsh_bands(dedup.minhash_signatures_doc(docs)))
+    cands = stage(
+        dedup.lsh_candidate_pairs(
+            bands_df, max_bucket_size=2, oversize_policy="star"
+        )
+    )
+    v1 = stage(
+        dedup._verify_candidates(
+            docs, cands, k=3, threshold=0.8, text_col="text", id_col="doc_id"
+        )
+    )
+    cand2 = stage(
+        dedup.star_second_hop_pairs(
+            bands_df, v1, 2, attempted=cands, reps_per_hop=8
+        )
+    )
     v2 = dedup._verify_candidates(
         docs, cand2, k=3, threshold=0.8, text_col="text", id_col="doc_id"
     )
@@ -1736,18 +1741,22 @@ def near_dup_star_rescued_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash→bands→star pipeline re-runs per consumer (~95 Spark
     # stages, 11.3 s at sf0.1 in the r10 bench); with them the query
     # runs each stage once (r11 task 4).
-    bands_df = dedup.lsh_bands(
-        dedup.minhash_signatures_doc(docs)
-    ).localCheckpoint()
-    cands = dedup.lsh_candidate_pairs(
-        bands_df, max_bucket_size=2, oversize_policy="star"
-    ).localCheckpoint()
-    v1 = dedup._verify_candidates(
-        docs, cands, k=3, threshold=0.8, text_col="text", id_col="doc_id"
-    ).localCheckpoint()
-    cand2 = dedup.star_rescue_pairs(
-        bands_df, v1, 2, attempted=cands, reps_per_bucket=1_000_000
-    ).localCheckpoint()
+    bands_df = stage(dedup.lsh_bands(dedup.minhash_signatures_doc(docs)))
+    cands = stage(
+        dedup.lsh_candidate_pairs(
+            bands_df, max_bucket_size=2, oversize_policy="star"
+        )
+    )
+    v1 = stage(
+        dedup._verify_candidates(
+            docs, cands, k=3, threshold=0.8, text_col="text", id_col="doc_id"
+        )
+    )
+    cand2 = stage(
+        dedup.star_rescue_pairs(
+            bands_df, v1, 2, attempted=cands, reps_per_bucket=1_000_000
+        )
+    )
     v2 = dedup._verify_candidates(
         docs, cand2, k=3, threshold=0.8, text_col="text", id_col="doc_id"
     )
@@ -1939,14 +1948,12 @@ def index_bucket_gauge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dup pipeline feeding its attached set — the previous form
     # called near_duplicates() alongside a second lsh_bands() chain, so
     # the minhash tower ran twice (and bucket_stats_frame reads its bands
-    # input three more times). Lazy localCheckpoints materialize bands
+    # input three more times). Lazy stages materialize bands
     # and the candidate set once; _verify_candidates with
     # near_duplicates' defaults (k=3, uncapped buckets, drop policy)
     # yields the identical verified-pairs relation.
-    bands = dedup.lsh_bands(dedup.minhash_signatures_doc(docs)).localCheckpoint(
-        eager=False
-    )
-    cands = dedup.lsh_candidate_pairs(bands).localCheckpoint(eager=False)
+    bands = stage(dedup.lsh_bands(dedup.minhash_signatures_doc(docs)), eager=False)
+    cands = stage(dedup.lsh_candidate_pairs(bands), eager=False)
     pairs = dedup._verify_candidates(
         docs, cands, k=3, threshold=0.8, text_col="text", id_col="doc_id"
     )

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..functions.staging import stage
 from ..operators import dedup
 
 _SUBDIRS = ("bands", "docs", "pairs")
@@ -330,8 +331,9 @@ def reconcile_capped_buckets(
 ) -> DataFrame:
     """Repair pass for an index maintained with ``max_bucket_size``: emit
     the star-policy edges for every bucket that has OUTGROWN the cap,
-    then optionally run the same second-hop repair loop as the batch path
-    (``dedup.near_duplicates(star_repair_hops=...)``).
+    then optionally run the same star-repair tower as the batch path
+    (``dedup._star_repair``, behind ``dedup.near_duplicates``'
+    ``star_repair_hops`` / ``star_rescue_reps``).
 
     The per-batch guard evaluates bucket sizes as of each batch, so a
     bucket that crosses the cap mid-stream splits into two regimes: early
@@ -506,7 +508,7 @@ def reconcile_capped_buckets(
             # incident to its members — reconcile-partition pairs
             # (negative ids) are excluded because the run that wrote
             # them already pulled every touched bucket into its own
-            # rescue scope (the round loop below). The activation filter
+            # rescue scope (the repair tower below). The activation filter
             # compares the stored watermark against this clock, and the
             # watermark WRITE covers it (greatest of band and attachment
             # clocks), so a drained bucket settles instead of
@@ -552,11 +554,11 @@ def reconcile_capped_buckets(
     if "__attwm" not in over.columns:
         over = over.withColumn("__attwm", F.lit(None).cast("long"))
     # the active over-cap bucket set drives the base star candidates, the
-    # rescue's first round, the hop loop's bucket scope, and the watermark
-    # write — materialize once
-    over = over.select(
-        "band", "band_sig", "ds", "__wm", "__stored", "__attwm"
-    ).localCheckpoint()
+    # repair tower's bucket scope, and the watermark write — materialize
+    # once
+    over = stage(
+        over.select("band", "band_sig", "ds", "__wm", "__stored", "__attwm")
+    )
     star = F.transform(
         F.slice(F.col("ds"), 2, F.greatest(F.size("ds") - 1, F.lit(0))),
         lambda y: F.struct(F.get(F.col("ds"), 0).alias("doc_a"), y.alias("doc_b")),
@@ -586,187 +588,47 @@ def reconcile_capped_buckets(
         doc_cols, cands, k=k, threshold=threshold, text_col="text", id_col="doc_id"
     )
     attempted_new = cands  # every candidate exact-verified THIS run
-    if repair_hops:
-        # same loop shape (and the same localCheckpoint plan-stacking fix)
-        # as the batch path, dedup.near_duplicates:462-486. `attempted`
-        # starts from the base star candidates plus every already-verified
-        # edge; failed edges from ORIGINAL per-batch candidate sets are
-        # unknown to the index (only successes persist) and may be retried
-        # once — wasted verification, never wrong output. The hop loop only
-        # looks at ACTIVE buckets (watermark-skipped ones were already
-        # repaired to convergence under this exact settings fingerprint).
-        hop_bands = band_cols.join(
-            over.select("band", "band_sig"), ["band", "band_sig"], "left_semi"
-        )
-        attempted = cands if old_edges is None else cands.unionByName(old_edges)
+    if repair_hops or fresh_reps_per_bucket:
+        # the shared star-repair tower (dedup._star_repair): its hop loop
+        # promotes from the ACTIVE buckets only, and its rescue drain
+        # starts from them (watermark-skipped ones were already repaired
+        # to convergence under this exact settings fingerprint; the drain
+        # re-enters them only when this run attaches one of their
+        # members). Already verified: this
+        # run's base repairs plus every stored pair. Already attempted:
+        # the base star candidates, the stored pairs and the persisted
+        # failures; failed edges from ORIGINAL per-batch candidate sets
+        # are unknown to the index (only successes persist) and may be
+        # retried once — wasted verification, never wrong output. The
+        # rescue's scoped drain reaches the global fixpoint WITHIN the
+        # run (no qualifying untried edge anywhere, the watermark-covered
+        # buckets included), which is exactly the batch path's
+        # star_rescue_reps fixpoint at the same min_shared_bands — the
+        # keep-list equality invariant.
+        repaired = stage(repaired)
+        verified = repaired.select("doc_a", "doc_b")
+        attempted = cands
+        if old_edges is not None:
+            verified = stage(verified.unionByName(old_edges))
+            attempted = attempted.unionByName(old_edges)
         if known_failed is not None:
-            # persisted failures are already-tested edges: keep the hop
-            # loop from re-proposing (and re-verifying) them
             attempted = attempted.unionByName(known_failed)
-        verified_all = (
-            repaired.select("doc_a", "doc_b")
-            if old_edges is None
-            else repaired.select("doc_a", "doc_b").unionByName(old_edges)
+        found, tried = dedup._star_repair(
+            doc_cols, band_cols, verified, attempted, max_bucket_size,
+            k=k, threshold=threshold, text_col="text", id_col="doc_id",
+            hops=repair_hops, reps_per_hop=reps_per_hop,
+            rescue_reps=fresh_reps_per_bucket,
+            rescue_min_bands=rescue_min_shared_bands,
+            scope=over.select("band", "band_sig"),
         )
-        n_hops = repair_hops if repair_hops > 0 else 1_000_000
-        hops_done = 0
-        for _ in range(n_hops):
-            repaired = repaired.localCheckpoint()
-            verified_all = verified_all.localCheckpoint()
-            cand2 = dedup.star_second_hop_pairs(
-                hop_bands,
-                verified_all,
-                max_bucket_size,
-                attempted=attempted,
-                reps_per_hop=reps_per_hop,
-            ).localCheckpoint()
-            if not cand2.head(1):
-                break
-            if hops_done == 0 and n_hops > 1:
-                # a further hop is possible: materialize the loop's
-                # static inputs once so later hops reuse them instead
-                # of re-scanning the bands table and re-deriving the
-                # attempted union (base candidates + stored pairs +
-                # failures) inside every anti-join (r11). Lazy on
-                # purpose — a single-hop run is cheaper re-deriving
-                # than checkpointing (measured on the batch twin).
-                hop_bands = hop_bands.localCheckpoint()
-                attempted = attempted.localCheckpoint()
-            hops_done += 1
-            v2 = dedup._verify_candidates(
-                doc_cols, cand2, k=k, threshold=threshold,
-                text_col="text", id_col="doc_id",
-            )
-            repaired = repaired.unionByName(v2)
-            verified_all = verified_all.unionByName(v2.select("doc_a", "doc_b"))
-            attempted = attempted.unionByName(cand2)
-            attempted_new = attempted_new.unionByName(cand2)
-    if fresh_reps_per_bucket:
-        # rescue POST-pass (promotion-starvation fix, docstring):
-        # unattached members of the scope buckets that still have an
-        # UNTRIED qualifying edge — a pair with an ATTACHED co-bucket
-        # member passing the band-agreement prefilter, after the base
-        # star, the hop loop, the accumulated verified pairs, and the
-        # persisted failures — propose those edges, bounded per bucket
-        # per ROUND. The loop iterates to the global fixpoint WITHIN the
-        # run: each round's attachments can create new qualifying
-        # targets (the newly attached member is now a valid rescue
-        # target wherever it sits), so the next round's scope is every
-        # over-cap bucket containing a member attached last round — the
-        # watermark-covered ones included; they are at fixpoint only
-        # w.r.t. the attached set as of their last processing — plus the
-        # buckets whose member slice overflowed the per-round bound.
-        # Terminates because every round's candidates enter `attempted`
-        # and candidates are drawn from a finite, shrinking untried set.
-        # At loop exit NO qualifying untried edge exists anywhere, which
-        # is exactly the batch path's star_rescue_reps fixpoint at the
-        # same min_shared_bands — the keep-list equality invariant.
-        repaired = repaired.localCheckpoint()
-        verified_all = repaired.select("doc_a", "doc_b")
-        if old_edges is not None:
-            verified_all = verified_all.unionByName(old_edges)
-        verified_all = verified_all.localCheckpoint()
-        attempted_all = attempted_new
-        if old_edges is not None:
-            attempted_all = attempted_all.unionByName(old_edges)
-        if known_failed is not None:
-            attempted_all = attempted_all.unionByName(known_failed)
-        overcap_all = (
-            band_cols.groupBy("band", "band_sig")
-            .agg(F.countDistinct("doc_id").alias("__n"))
-            .where(F.col("__n") > max_bucket_size)
-            .select("band", "band_sig")
-            .localCheckpoint()
-        )
-        # the attempted union and the over-cap band-row restriction are
-        # static within the run; the restriction reuses the already-
-        # checkpointed overcap_all keys from round 1 (lazily — the
-        # enumeration re-applies the cap filter on the restricted frame,
-        # so this is exactly the internal derivation minus the full-table
-        # size aggregate), and both are materialized at the first
-        # productive round so later rounds reuse them — while a no-op or
-        # single-round run never pays the checkpoint (r11; same
-        # rationale as the batch loops)
-        ob_cap = band_cols.distinct().join(
-            overcap_all, ["band", "band_sig"], "left_semi"
-        )
-        rounds_done = 0
-        scope = over.select("band", "band_sig")
-        while True:
-            # full band table + member scope: eligible members come from
-            # the scope buckets, but pair enumeration and the
-            # shared-bucket count run over ALL over-cap buckets (a
-            # scoped count would mis-filter pairs whose other shared
-            # buckets are watermark-covered — see _star_untried_edges)
-            untried = dedup._star_untried_edges(
-                band_cols, verified_all, max_bucket_size,
-                attempted=attempted_all,
-                min_shared_bands=rescue_min_shared_bands,
-                member_buckets=scope,
-                overcap_bands=ob_cap,
-            ).localCheckpoint()
-            sliced = (
-                untried.groupBy("band", "band_sig")
-                .agg(F.array_sort(F.collect_set("__m")).alias("__ms"))
-                .select(
-                    "band",
-                    "band_sig",
-                    F.slice("__ms", 1, fresh_reps_per_bucket).alias("__fr"),
-                    (F.size("__ms") > fresh_reps_per_bucket).alias("__ovf"),
-                )
-                .localCheckpoint()
-            )
-            chosen = sliced.select(
-                "band", "band_sig", F.explode("__fr").alias("__m")
-            )
-            rescue_cands = (
-                untried.join(chosen, ["band", "band_sig", "__m"], "left_semi")
-                .select("doc_a", "doc_b")
-                .distinct()
-                .localCheckpoint()
-            )
-            if not rescue_cands.head(1):
-                break
-            if rounds_done == 0:
-                # first productive round — the while loop always admits
-                # another: materialize the static inputs now
-                ob_cap = ob_cap.localCheckpoint()
-                attempted_all = attempted_all.localCheckpoint()
-            rounds_done += 1
-            v3 = dedup._verify_candidates(
-                doc_cols, rescue_cands, k=k, threshold=threshold,
-                text_col="text", id_col="doc_id",
-            ).localCheckpoint()
-            repaired = repaired.unionByName(v3).localCheckpoint()
-            attempted_new = attempted_new.unionByName(rescue_cands)
-            attempted_all = attempted_all.unionByName(rescue_cands)
-            verified_all = verified_all.unionByName(
-                v3.select("doc_a", "doc_b")
-            ).localCheckpoint()
-            touched = (
-                ob_cap.join(
-                    v3.select(
-                        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-                    ).distinct(),
-                    "doc_id",
-                    "left_semi",
-                )
-                .select("band", "band_sig")
-                .distinct()
-            )
-            scope = (
-                touched.unionByName(
-                    sliced.where(F.col("__ovf")).select("band", "band_sig")
-                )
-                .distinct()
-                .localCheckpoint()
-            )
+        repaired = repaired.unionByName(found)
+        attempted_new = attempted_new.unionByName(tried)
     pid = reconcile_partition_id(reconcile_id)
     # materialize the return value BEFORE the overwrite: its lineage
     # anti-joins against ALL existing pairs partitions, including the one
     # the dynamic overwrite below replaces — a caller materializing the
     # returned DataFrame afterwards would otherwise re-read a deleted file
-    repaired = repaired.localCheckpoint()
+    repaired = stage(repaired)
     ghost = None
     if use_watermarks:
         # the GHOST hold (see the watermark write below) is derivation
@@ -778,14 +640,13 @@ def reconcile_capped_buckets(
         # deleted files (FAILED_READ_FILE) after the pairs already
         # landed — a crash the watermark ordering makes safe but a cron
         # shouldn't pay. Cheap: bucket keys anti-joined on doc ids.
-        ghost = (
+        ghost = stage(
             bands.select("doc_id", "band", "band_sig")
             .join(over.select("band", "band_sig"), ["band", "band_sig"],
                   "left_semi")
             .join(doc_cols.select("doc_id"), "doc_id", "left_anti")
             .select("band", "band_sig")
             .distinct()
-            .localCheckpoint()
         )
     failed_new = None
     if persist_failures:
@@ -805,7 +666,7 @@ def reconcile_capped_buckets(
         # and until then re-proposing them is a few dropped rows per run,
         # never a lost pair.
         doc_ids = doc_cols.select("doc_id")
-        failed_new = (
+        failed_new = stage(
             attempted_new.join(
                 repaired.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
             )
@@ -816,7 +677,6 @@ def reconcile_capped_buckets(
                 doc_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
             )
             .distinct()
-            .localCheckpoint()
         )
     to_write = repaired
     if old_pairs is not None and "batch_id" in old_pairs.columns:
@@ -827,9 +687,9 @@ def reconcile_capped_buckets(
         # every re-run that follows new ingest. Disjoint by construction
         # (anti-join above), so no dedup needed. Materialized for the same
         # reads-what-it-overwrites reason as `repaired`.
-        prior = old_pairs.where(
-            F.col("batch_id") == pid
-        ).select(*repaired.columns).localCheckpoint()
+        prior = stage(
+            old_pairs.where(F.col("batch_id") == pid).select(*repaired.columns)
+        )
         to_write = repaired.unionByName(prior)
     _write_batch(to_write, index_dir, "pairs", pid)
     if persist_failures:
@@ -845,7 +705,7 @@ def reconcile_capped_buckets(
                 "doc_a", "doc_b", "config_sig"
             )
             new_fl = new_fl.unionByName(prior_fl).distinct()
-        new_fl = new_fl.localCheckpoint()
+        new_fl = stage(new_fl)
         _write_batch(new_fl, index_dir, "failed", pid)
     if use_watermarks:
         # AFTER the pairs land (crash between the writes → re-verify, never
@@ -860,7 +720,7 @@ def reconcile_capped_buckets(
             # attachments as of derivation (greatest skips nulls)
             F.greatest(F.col("__wm"), F.col("__attwm")).alias("watermark"),
         )
-        # No overflow hold is needed (round-10): the rescue's round loop
+        # No overflow hold is needed (round-10): the tower's rescue drain
         # above drains to the global fixpoint WITHIN the run (per-round
         # slice overflow feeds the next round's scope), so an advanced
         # watermark genuinely certifies "no qualifying untried edge
@@ -887,10 +747,9 @@ def reconcile_capped_buckets(
                 "band", "band_sig", "config_sig", "watermark"
             )
             new_wm = new_wm.unionByName(prior_wm)
-        new_wm = (
+        new_wm = stage(
             new_wm.groupBy("band", "band_sig", "config_sig")
             .agg(F.max("watermark").alias("watermark"))
-            .localCheckpoint()
         )
         _write_batch(new_wm, index_dir, "reconciled", pid)
     return repaired
