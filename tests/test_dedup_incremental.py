@@ -125,6 +125,91 @@ def test_near_dup_index_cli(spark, tmp_path):
     assert keep == {(1, 1), (2, 1), (3, 3), (4, 1), (5, 5)}
 
 
+def test_update_pairs_plan_reads_staged_bands_and_candidates(
+    spark, tmp_path, monkeypatch
+):
+    """The batch's band rows and its distinct candidates are staged once:
+    the pairs write of a later batch must neither re-derive band rows
+    (posexplode) nor rescan the old band table. Unstaged, Catalyst copies
+    both subplans into every branch that reads them (15 posexplodes and
+    10 bands scans on this fixture)."""
+    idx = str(tmp_path / "idx")
+    plans = {}
+    write = di._write_batch
+
+    def capture(df, index_dir, sub, batch_id):
+        if sub == "pairs":
+            plans[batch_id] = df._jdf.queryExecution().executedPlan().toString()
+        write(df, index_dir, sub, batch_id)
+
+    monkeypatch.setattr(di, "_write_batch", capture)
+    for bi, rows in enumerate((ROWS_B1, ROWS_B2)):
+        di.update_near_dup_index(
+            spark, _df(spark, rows), idx, batch_id=bi,
+            max_bucket_size=2, oversize_policy="star",
+        )
+    plan = plans[1]
+    assert "posexplode" not in plan
+    assert f"{idx}/bands" not in plan
+    # the staged frames still feed a correct verify: 4 links to 1 and 2
+    linked = {
+        (r.doc_a, r.doc_b)
+        for r in spark.read.parquet(f"{idx}/pairs").where("batch_id = 1").collect()
+    }
+    assert (1, 4) in linked
+
+
+def test_update_durable_staging_and_retry_match_local(spark, tmp_path, capsys):
+    """NEAR_DUP_INDEX_UPDATE stages the batch's bands and candidates
+    through functions/staging.stage: with --stagingDir they land as
+    parquet under it, and the index tables and printed counts equal a
+    localCheckpoint run's. A retried --batchId prints the same count and
+    leaves every table unchanged (dynamic partition overwrite)."""
+    import os
+
+    from translator_tm_provider_pipelines_spark import cli
+
+    batches = []
+    for b, rows in enumerate((ROWS_B1, ROWS_B2)):
+        path = str(tmp_path / f"b{b}")
+        _df(spark, rows).write.parquet(path)
+        batches.append(path)
+    sdir = str(tmp_path / "staging")
+
+    def update(idx, bi, *extra):
+        cli.main([
+            "NEAR_DUP_INDEX_UPDATE", "--newDocs", batches[bi], "--indexDir", idx,
+            "--batchId", str(bi), "--maxBucketSize", "2",
+            "--oversizePolicy", "star", *extra,
+        ])
+        return capsys.readouterr().out
+
+    def tables(idx):
+        return {
+            sub: sorted(map(tuple, spark.read.parquet(f"{idx}/{sub}").collect()))
+            for sub in ("pairs", "bands", "docs")
+        }
+
+    local, durable = str(tmp_path / "local"), str(tmp_path / "durable")
+    local_out = [update(local, bi) for bi in range(2)]
+    durable_out = [update(durable, bi, "--stagingDir", sdir) for bi in range(2)]
+    assert durable_out == local_out
+    # star over the capped 3-member bucket: only the representative edge 1-4
+    assert "batch 1: 1 new verified pairs" in local_out[1]
+    before = tables(durable)
+    assert before == tables(local)
+    staged = [
+        name
+        for d in os.listdir(sdir)
+        for name in os.listdir(os.path.join(sdir, d))
+        if name.endswith(".parquet")
+    ]
+    assert staged
+
+    assert update(durable, 1, "--stagingDir", sdir) == durable_out[1]
+    assert tables(durable) == before
+
+
 @pytest.mark.slow
 def test_incremental_equals_batch_random_splits(spark, tmp_path):
     """Property: for ANY partition of the corpus into ordered batches, the

@@ -97,6 +97,55 @@ def test_cli_defaults_to_durable_staging_and_cleans_up(spark, tmp_path):
     assert kept[1] == 2 and kept[2] == 2 and kept[3] == 3
 
 
+def test_cli_output_dir_flag_defaults_to_durable_staging(spark, tmp_path):
+    """A pipeline whose output flag is --outputDir (CLASSIFIED_SENTENCE_
+    STORAGE, which stages its gated base table) must derive the default
+    <outputDir>__staging like --output runs do, not fall back to
+    localCheckpoint, and remove it after the run."""
+    from translator_tm_provider_pipelines_spark import schemas
+    from translator_tm_provider_pipelines_spark.operators import classified as clf
+
+    spark.createDataFrame(
+        [(
+            "s1", "d1", "CHEBI:1", "aspirin", [(0, 7)], "MONDO:2", "headache",
+            [(15, 23)], None, "aspirin treats headache", None, "abstract",
+            [], "1999", 0, [], [], [],
+        )],
+        schema=schemas.EXTRACTED_SENTENCE,
+    ).write.parquet(str(tmp_path / "meta"))
+    (tmp_path / "bert").mkdir()
+    (tmp_path / "bert" / "part-0.tsv").write_text("s1\tph\t0.9\t0.05\t0.05\n")
+    out = str(tmp_path / "out")
+
+    seen = {}
+    orig_stage = clf.stage
+
+    def probe(df, eager=True):
+        seen["dir"] = df.sparkSession.conf.get(STAGING_DIR_CONF, None)
+        return orig_stage(df, eager=eager)
+
+    clf.stage = probe
+    try:
+        rc = cli.main(
+            [
+                "CLASSIFIED_SENTENCE_STORAGE",
+                "--bertOutput", str(tmp_path / "bert"),
+                "--metadata", str(tmp_path / "meta"),
+                "--association",
+                "biolink:ChemicalToDiseaseOrPhenotypicFeatureAssociation",
+                "--bertScoreInclusionMinimumThreshold", "0.5",
+                f"--outputDir={out}/",
+            ]
+        )
+    finally:
+        clf.stage = orig_stage
+    assert rc == 0
+    assert seen["dir"] == out + "__staging"
+    assert not os.path.exists(out + "__staging")
+    assert spark.conf.get(STAGING_DIR_CONF, None) in (None, "")
+    assert spark.read.parquet(f"{out}/assertion").count() == 1
+
+
 def test_cli_explicit_staging_dir_is_kept(spark, tmp_path):
     docs = spark.createDataFrame(
         [

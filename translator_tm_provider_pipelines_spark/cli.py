@@ -1610,13 +1610,17 @@ def main(argv: list[str] | None = None) -> int:
             del rest[i]
             break
     if not user_staging:
+        # the pipelines name their output --output or --outputDir
+        # (CLASSIFIED_SENTENCE_STORAGE); both derive the default
         for i, a in enumerate(rest):
-            if a == "--output" and i + 1 < len(rest):
-                staging = rest[i + 1].rstrip("/") + "__staging"
-                break
-            if a.startswith("--output="):
-                staging = a.split("=", 1)[1].rstrip("/") + "__staging"
-                break
+            flag, eq, val = a.partition("=")
+            if flag not in ("--output", "--outputDir"):
+                continue
+            if not eq and i + 1 < len(rest):
+                val = rest[i + 1]
+            if val:
+                staging = val.rstrip("/") + "__staging"
+            break
 
     spark = get_spark(app_name=f"engine-{key.lower()}")
     if staging:

@@ -144,7 +144,9 @@ def classified_sentence_tables(
     # re-join them) each re-evaluated the whole gate+explode+sha256 tower —
     # the trapi_assoc_nt plan held 5 copies. base is extraction-output-
     # sized (what a production run materializes between stages anyway) and
-    # is computed inside the query run, never across runs.
+    # is computed inside the query run, never across runs. Under a
+    # configured staging dir (CLI runs) stage() ignores eager=False: the
+    # durable form is a parquet write, so base is computed right here.
     base = stage(base, eager=False)
 
     assertion = base.select(

@@ -24,10 +24,15 @@ zero-shuffle per-row program), joins them against the accumulated band
 table on (band, band_sig) — new-vs-old and new-vs-new candidates in one
 equi-join, with the new side small enough to broadcast — and
 exact-Jaccard-verifies only the candidates (shingling is restricted to
-candidate documents by a semi-join, batch-path invariant). Appends are
-idempotent: every batch writes its own ``batch_id=N`` partition with
-dynamic partition overwrite, so a foreachBatch retry overwrites rather
-than duplicates.
+candidate documents by a semi-join, batch-path invariant). The batch's
+band rows and its distinct candidate pairs are each staged once
+(``functions/staging.stage``): several branches of one physical plan read
+them, and Catalyst does not share a subplan across branches, so unstaged
+every branch re-derived the MinHash bands and re-scanned the old band
+table. Appends are idempotent: every batch writes its own ``batch_id=N``
+partition with dynamic partition overwrite and reads the index without
+that partition, so a foreachBatch retry overwrites rather than
+duplicates.
 
 Equivalence contract (pinned by test): with unique doc ids and no bucket
 cap, the union of per-batch verified pairs over any batch split equals
@@ -137,20 +142,36 @@ def update_near_dup_index(
     stars against the whole bucket in that batch's equi-join — keep-list
     equality with the batch star path on tight clusters is pinned by
     test for arrival orders where the representative comes first, last,
-    and mid-stream."""
+    and mid-stream.
+
+    The batch's band rows and its distinct candidates are staged once
+    (``functions/staging.stage``; localCheckpoint, or parquet under a
+    configured staging dir): the band join, the bucket-size aggregate,
+    both verify sides, the candidate-id semi-join and the bands write
+    all read them, and an unstaged frame is recomputed once per plan
+    branch that reads it. Writes stay pairs, then bands, then docs."""
     batch = new_docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    new_bands = dedup.lsh_bands(
-        dedup.minhash_signatures_doc(batch, k=k, num_perms=num_perms),
-        rows_per_band=rows_per_band,
+    # staged: read by the band join, the size aggregate and the bands write
+    new_bands = stage(
+        dedup.lsh_bands(
+            dedup.minhash_signatures_doc(batch, k=k, num_perms=num_perms),
+            rows_per_band=rows_per_band,
+        )
     )
-    old_bands = _read_index(spark, index_dir, "bands")
-    all_bands = (
-        new_bands
-        if old_bands is None
-        else new_bands.unionByName(old_bands.select("doc_id", "band", "band_sig"))
-    )
+
+    def prior(sub: str, *cols: str) -> DataFrame | None:
+        # the index as it stood before this batch: a retried batch_id skips
+        # the partition its earlier attempt wrote, or the batch's docs
+        # would join the corpus twice and every new pair would land twice
+        df = _read_index(spark, index_dir, sub)
+        if df is None:
+            return None
+        return df.where(F.col("batch_id") != batch_id).select(*cols)
+
+    old_bands = prior("bands", "doc_id", "band", "band_sig")
+    all_bands = new_bands if old_bands is None else new_bands.unionByName(old_bands)
     # one equi-join on the bucket key: the new side is the micro-batch;
     # every candidate has >= 1 new member, so new-vs-old and new-vs-new
     # pairs both fall out. least/greatest normalizes pair order so
@@ -187,14 +208,11 @@ def update_near_dup_index(
             # bucket's global min always carries it in doc_a
             keep = keep | (F.col("doc_a") == F.col("__bmin"))
         cands = cands.join(sizes, ["band", "band_sig"]).where(keep)
-    cands = cands.select("doc_a", "doc_b").distinct()
+    # staged: read by both verify sides and the candidate-id semi-join
+    cands = stage(cands.select("doc_a", "doc_b").distinct())
 
-    old_docs = _read_index(spark, index_dir, "docs")
-    corpus = (
-        batch
-        if old_docs is None
-        else batch.unionByName(old_docs.select("doc_id", "text"))
-    )
+    old_docs = prior("docs", "doc_id", "text")
+    corpus = batch if old_docs is None else batch.unionByName(old_docs)
     cand_ids = cands.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
